@@ -34,14 +34,15 @@ def test_warm_and_cold_plan_budgets_hold(spark, sf_dir):
 
     golden = json.load(open(_GOLDEN))
     assert set(golden["queries"]) == set(WARM_PINNED), (
-        "golden/query-list drift — regenerate tools/plan_warm_sweep.py")
+        "golden/query-list drift — regenerate docs/plan_budgets_warm.json "
+        "with `python tools/plan_warm_sweep.py`")
     got = sweep(spark, sf_dir=sf_dir)
     regressions = [(n, golden["queries"][n], got[n])
                    for n in sorted(got) if got[n] != golden["queries"][n]]
     assert not regressions, (
         "warm/cold plan budgets regressed (regenerate "
-        "docs/plan_budgets_warm.json ONLY if the change is intended): "
-        f"{regressions}")
+        "docs/plan_budgets_warm.json with `python tools/plan_warm_sweep.py` "
+        f"ONLY if the change is intended): {regressions}")
 
 
 def test_warm_pinned_set_matches_exclusion_ledger():

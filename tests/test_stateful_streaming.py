@@ -1,6 +1,7 @@
-"""Custom stateful streaming (applyInPandasWithState) and the foreachBatch
-streaming-upsert sink — the complete Lambda-analog pipeline (SURVEY §3.2:
-stream → validate → stateful/windowed transform → idempotent keyed sink)."""
+"""Stateful streaming (built-in aggregates and applyInPandasWithState)
+and the foreachBatch streaming-upsert sink — the complete Lambda-analog
+pipeline (SURVEY §3.2: stream → validate → stateful/windowed transform
+→ idempotent keyed sink)."""
 
 from __future__ import annotations
 
@@ -16,21 +17,37 @@ from zoom_etl_spark.streaming.stateful import user_lifetime_stats
 
 
 def test_stateful_user_stats_matches_batch(spark, sf_dir):
-    stream = read_events_stream(spark, sf_dir)
-    out = user_lifetime_stats(stream)
-    q = (out.writeStream.format("memory").queryName("t_stateful_stats")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
-    # update mode re-emits per batch; the final row per user is the state
-    got = {r.user_id: (r.n_events, r.value_milli)
-           for r in spark.table("t_stateful_stats").collect()}
+    """Lifetime counters carried across THREE out-of-event-time-order
+    micro-batches (newest first): the finalized update log equals the
+    batch (n_events, value_milli, last_ts), so last_ts never regresses
+    when older batches land after newer ones. Pins the design choice
+    too: both aggregate-state operators are built-in streaming
+    aggregates (JVM state), not Python state machines."""
+    from zoom_etl_spark.operators.windows import topk_per_group
+    from zoom_etl_spark.streaming.stateful import lastwins_maintain
+
+    for op in (user_lifetime_stats, lastwins_maintain):
+        plan = (op(read_events_stream(spark, sf_dir))
+                ._jdf.queryExecution().analyzed().toString())
+        assert "FlatMapGroupsInPandasWithState" not in plan, op.__name__
+
+    log = _newest_first_replay(spark, sf_dir, "t_stateful_stats",
+                               user_lifetime_stats)
+    final = topk_per_group(log, keys=["user_id"],
+                           order=[F.col("n_events").desc(),
+                                  F.col("last_ts").desc()], k=1)
+    got = {r.user_id: (r.n_events, r.value_milli, r.last_ts)
+           for r in final.collect()}
+    # the replay must actually carry state: some key is re-emitted
+    assert log.count() > len(got)
 
     e = table(spark, sf_dir, "events")
-    want = {r.user_id: (r.n, r.s) for r in
+    want = {r.user_id: (r.n, r.s, r.t) for r in
             e.groupBy("user_id").agg(
                 F.count("*").alias("n"),
                 F.sum(F.floor(F.col("value") * 1000).cast("long"))
-                 .alias("s")).collect()}
+                 .alias("s"),
+                F.max("ts").alias("t")).collect()}
     assert got == want
 
 
@@ -285,16 +302,16 @@ def test_lastwins_ivm_out_of_order_multibatch(spark, sf_dir):
     assert got == want
 
 
-def _retract_replay(spark, sf_dir, qname):
+def _newest_first_replay(spark, sf_dir, qname, op):
     """Replay events as 3 out-of-event-time-order micro-batches (newest
-    first) through retract_maintain; return the drained changelog."""
+    first) through the update-mode operator ``op``; return the drained
+    update log."""
     from pyspark.sql.window import Window
 
     from zoom_etl_spark.streaming.ingest import EVENTS_SCHEMA
-    from zoom_etl_spark.streaming.stateful import retract_maintain
 
     e = table(spark, sf_dir, "events")
-    srcdir = tempfile.mkdtemp(prefix="zes_retract_")
+    srcdir = tempfile.mkdtemp(prefix="zes_replay_")
     thirds = F.ntile(3).over(Window.orderBy(F.col("ts").desc()))
     raw = (e.withColumn("g", thirds)
            .withColumn("ts", F.unix_micros("ts") * 1000))
@@ -305,7 +322,7 @@ def _retract_replay(spark, sf_dir, qname):
               .option("maxFilesPerTrigger", "1")
               .option("recursiveFileLookup", "true").parquet(srcdir)
               .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000"))))
-    out = retract_maintain(stream)
+    out = op(stream)
     q = (out.writeStream.format("memory").queryName(qname)
          .outputMode("update").trigger(availableNow=True).start())
     q.awaitTermination()
@@ -316,9 +333,11 @@ def test_retract_ivm_changelog_algebra(spark, sf_dir):
     """Every retraction must carry EXACTLY a previously-emitted addition
     (same key, version, count, sum), ops must net to one live row per
     key, and the fold must equal the batch aggregate."""
-    from zoom_etl_spark.streaming.stateful import changelog_fold
+    from zoom_etl_spark.streaming.stateful import (changelog_fold,
+                                                   retract_maintain)
 
-    log = _retract_replay(spark, sf_dir, "t_retract_alg").collect()
+    log = _newest_first_replay(spark, sf_dir, "t_retract_alg",
+                               retract_maintain).collect()
     adds = {(r.user_id, r.version): (r.n_events, round(r.value_sum, 6))
             for r in log if r.op in ("+I", "+U")}
     retracts = [(r.user_id, r.version, r.n_events, round(r.value_sum, 6))
@@ -348,7 +367,10 @@ def test_retract_ivm_downstream_consumer(spark, sf_dir):
     GLOBAL total by adding '+' rows and subtracting '-' rows converges to
     the batch total — impossible with last-wins re-emission alone (it
     would double-count every updated key)."""
-    log = _retract_replay(spark, sf_dir, "t_retract_sum")
+    from zoom_etl_spark.streaming.stateful import retract_maintain
+
+    log = _newest_first_replay(spark, sf_dir, "t_retract_sum",
+                               retract_maintain)
     signed = log.select(
         F.when(F.col("op") == "-U", -F.col("n_events"))
         .otherwise(F.col("n_events")).alias("n"),
@@ -591,10 +613,11 @@ def test_stateful_restart_resumes_state(spark, sf_dir):
     explicit checkpoint, then start a NEW query from the SAME checkpoint
     after more (strictly older) files land. File-source progress must
     resume (only the new file replays) and the per-key state must be
-    RESTORED: `_lastwins_update` re-emits the current winner for every
-    touched key, so with restored state the resumed drain emits the
-    phase-1 winners for keys whose newest event predates the restart —
-    lost state would emit the older tail events as winners instead."""
+    RESTORED: update mode re-emits the current winner (the aggregate
+    state) for every touched key, so with restored state the resumed
+    drain emits the phase-1 winners for keys whose newest event
+    predates the restart — lost state would emit the older tail events
+    as winners instead."""
     import tempfile
 
     from pyspark.sql.window import Window

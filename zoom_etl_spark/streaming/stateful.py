@@ -1,12 +1,15 @@
-"""Custom stateful streaming operators (applyInPandasWithState) — the
-escape hatch when built-in windows/watermarks can't express the state
-machine (SURVEY §2.9; the engine analog of the reference's stateful
-watermark Variable, generalized to arbitrary per-key state).
+"""Stateful streaming operators: per-key state carried across
+micro-batches (SURVEY §2.9; the engine analog of the reference's
+stateful watermark Variable, generalized to arbitrary per-key state).
 
-Example operator: per-user lifetime counters (events seen, value sum,
-last event time) maintained across micro-batches. GroupStateTimeout is
-off — state lives for the stream's lifetime; production variants key
-eviction off event-time timeouts.
+Built-ins first: where the state is just an aggregate (the per-user
+lifetime counters, the last-wins winner) the operator is an update-mode
+streaming ``groupBy().agg()`` and Spark keeps the state in the JVM.
+``applyInPandasWithState`` is the escape hatch for the true state
+machines built-in windows/watermarks can't express (SCD2, retraction,
+anomaly, top-k, bitemporal, ...). Their GroupStateTimeout is off —
+state lives for the stream's lifetime; production variants key eviction
+off event-time timeouts.
 """
 
 from __future__ import annotations
@@ -21,46 +24,20 @@ from pyspark.sql.types import (ArrayType, BooleanType, DoubleType, LongType,
                                StringType, StructField, StructType,
                                TimestampType)
 
-OUTPUT_SCHEMA = StructType([
-    StructField("user_id", LongType(), True),
-    StructField("n_events", LongType(), True),
-    StructField("value_milli", LongType(), True),  # Σ floor(value·1000): exact
-    StructField("last_ts", TimestampType(), True),
-])
-
-STATE_SCHEMA = StructType([
-    StructField("n_events", LongType(), True),
-    StructField("value_milli", LongType(), True),
-    StructField("last_ts_us", LongType(), True),  # state can't hold timestamps
-])
-
-
-def _update(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    # the running sum lives on the exact 1e-3 integer grid, so the
-    # converged state is batch-split- and order-invariant — which is what
-    # lets this operator carry a full value-hash oracle gate
-    n, vmilli, last_us = state.get if state.exists else (0, 0, 0)
-    for pdf in pdfs:
-        n += len(pdf)
-        vmilli += int(np.floor(pdf["value"].to_numpy() * 1000)
-                      .astype(np.int64).sum())
-        if len(pdf):
-            last_us = max(last_us, int(pdf["ts"].max().value // 1000))
-    state.update((n, vmilli, last_us))
-    yield pd.DataFrame({
-        "user_id": [key[0]],
-        "n_events": [n],
-        "value_milli": [vmilli],
-        "last_ts": [pd.Timestamp(last_us * 1000)],
-    })
-
 
 def user_lifetime_stats(events_stream: DataFrame) -> DataFrame:
-    """Per-user running totals as a stateful stream (update output mode)."""
+    """Per-user running totals as a stateful stream (update output mode):
+    a built-in streaming aggregate, so the state is Spark's own JVM
+    partials. The running sum lives on the exact 1e-3 integer grid, so
+    the converged state is batch-split- and order-invariant — which is
+    what lets this operator carry a full value-hash oracle gate."""
+    from pyspark.sql import functions as F
     return (events_stream
             .groupBy("user_id")
-            .applyInPandasWithState(_update, OUTPUT_SCHEMA, STATE_SCHEMA,
-                                    "update", GroupStateTimeout.NoTimeout))
+            .agg(F.count("*").alias("n_events"),
+                 F.sum(F.floor(F.col("value") * 1000).cast("long"))
+                  .alias("value_milli"),
+                 F.max("ts").alias("last_ts")))
 
 
 # ---------------------------------------------------------------- SCD2 IVM
@@ -182,38 +159,6 @@ def scd2_finalize(emitted: DataFrame) -> DataFrame:
 
 # ----------------------------------------------------------- last-wins IVM
 
-LASTWINS_OUTPUT_SCHEMA = StructType([
-    StructField("user_id", LongType(), True),
-    StructField("event_id", LongType(), True),
-    StructField("event_type", StringType(), True),
-    StructField("ts", TimestampType(), True),
-    StructField("value", DoubleType(), True),
-])
-
-LASTWINS_STATE_SCHEMA = StructType([
-    StructField("ts_us", LongType(), True),
-    StructField("event_id", LongType(), True),
-    StructField("event_type", StringType(), True),
-    StructField("value", DoubleType(), True),
-])
-
-
-def _lastwins_update(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    cur = state.get if state.exists else None
-    for pdf in pdfs:
-        for r in pdf.itertuples():
-            cand = (int(r.ts.value // 1000), int(r.event_id),
-                    str(r.event_type), float(r.value))
-            if cur is None or (cand[0], cand[1]) > (cur[0], cur[1]):
-                cur = cand
-    if cur is None:
-        return
-    state.update(cur)
-    yield pd.DataFrame({
-        "user_id": [key[0]], "event_id": [cur[1]], "event_type": [cur[2]],
-        "ts": [pd.Timestamp(cur[0] * 1000)], "value": [cur[3]]})
-
-
 def lastwins_maintain(events_stream: DataFrame) -> DataFrame:
     """Continuously-maintained last-wins view (ROADMAP item 5): per key,
     the payload of the latest (ts, event_id) — the streaming IVM analog
@@ -225,12 +170,16 @@ def lastwins_maintain(events_stream: DataFrame) -> DataFrame:
     across micro-batches: state keeps only the max (ts, event_id) pair
     seen, so a late replay can never regress the view, and redelivered
     duplicates are no-ops. State is one fixed-width row per key —
-    bounded by key cardinality, independent of stream length."""
+    bounded by key cardinality, independent of stream length. The
+    winner is the built-in ``max`` over a struct that orders by
+    (ts, event_id) first, so Spark's streaming aggregation keeps it."""
+    from pyspark.sql import functions as F
     return (events_stream
             .groupBy("user_id")
-            .applyInPandasWithState(_lastwins_update, LASTWINS_OUTPUT_SCHEMA,
-                                    LASTWINS_STATE_SCHEMA, "update",
-                                    GroupStateTimeout.NoTimeout))
+            .agg(F.max(F.struct("ts", "event_id", "event_type", "value"))
+                 .alias("w"))
+            .select("user_id", "w.event_id", "w.event_type", "w.ts",
+                    "w.value"))
 
 
 RETRACT_OUTPUT_SCHEMA = StructType([

@@ -92,20 +92,21 @@ SELECT user_id,
 FROM events GROUP BY 1
 """)
 def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming op (applyInPandasWithState): per-user
-    lifetime counters maintained across micro-batches — the arbitrary-
-    state generalization of the reference's watermark Variable. Upgraded
-    from rows-only to a FULL value-hash gate by moving the running sum
-    onto the exact 1e-3 integer grid (batch-split- and order-invariant,
-    the stream_anomaly_ivm precedent); the drained update log converges
-    to the batch groupBy, emission-monotone in (n_events, last_ts)."""
+    """Stateful streaming op: per-user lifetime counters maintained
+    across micro-batches — the per-key-state generalization of the
+    reference's watermark Variable. The state is just an aggregate
+    (count, milli-sum, max ts), so it is a built-in update-mode
+    streaming aggregate with JVM state, not a Python state machine.
+    FULL value-hash gate: the running sum lives on the exact 1e-3
+    integer grid (batch-split- and order-invariant, the
+    stream_anomaly_ivm precedent); the drained update log converges to
+    the batch groupBy, emission-monotone in (n_events, last_ts)."""
     from ..operators.windows import topk_per_group
     from ..streaming.stateful import user_lifetime_stats
     stream = read_events_stream(spark, sf_dir)
     out = user_lifetime_stats(stream)
     run_available_now(out, "stream_stateful_result", output_mode="update",
-                        n_state_partitions=replay_state_partitions(
-                            spark, python_stateful=True))
+                        n_state_partitions=replay_state_partitions(spark))
     log = spark.table("stream_stateful_result")
     return topk_per_group(log, keys=["user_id"],
                           order=[F.col("n_events").desc(),
@@ -258,15 +259,15 @@ WHERE rn = 1
 """)
 def stream_lastwins_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incrementally-maintained last-wins view: state = one fixed-width
-    row per key (the max (ts, event_id) payload), out-of-order and
-    redelivery tolerant. Converged state is oracle-checked against the
+    row per key (the max (ts, event_id) payload, a built-in streaming
+    max over a struct with JVM state), out-of-order and redelivery
+    tolerant. Converged state is oracle-checked against the
     batch row_number()=1 formulation — full value-hash gate."""
     from ..streaming.stateful import lastwins_finalize, lastwins_maintain
     stream = read_events_stream(spark, sf_dir)
     out = lastwins_maintain(stream)
     run_available_now(out, "stream_lastwins_log", output_mode="update",
-                        n_state_partitions=replay_state_partitions(
-                            spark, python_stateful=True))
+                        n_state_partitions=replay_state_partitions(spark))
     return lastwins_finalize(spark.table("stream_lastwins_log")).select(
         "user_id", "event_id", "event_type", "ts", "value")
 
@@ -1420,8 +1421,7 @@ def stream_drift_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.sum("isb").alias("nb"),
                    F.sum(1 - F.col("isb")).alias("nc")))
     run_available_now(counts, "stream_drift_log", output_mode="update",
-                      n_state_partitions=replay_state_partitions(
-                          spark, python_stateful=True))
+                      n_state_partitions=replay_state_partitions(spark))
     c = (spark.table("stream_drift_log")
          .groupBy("event_type", "bucket")
          .agg(F.max("nb").alias("nb"), F.max("nc").alias("nc"))
@@ -1478,8 +1478,7 @@ def stream_shard_manifest_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.bit_xor("hv").alias("checksum")))
     run_available_now(agg, "stream_shard_manifest_log",
                       output_mode="update",
-                      n_state_partitions=replay_state_partitions(
-                          spark, python_stateful=True))
+                      n_state_partitions=replay_state_partitions(spark))
     log = spark.table("stream_shard_manifest_log")
     return (log.groupBy("shard")
             .agg(F.max("n_events").alias("n_events"),
